@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{TextAnalysis, VectorFunctions}
-import graft.operators.{Dedup, Multimodal, Similarity}
+import graft.operators.{Dedup, Multimodal, OperatorState, Similarity}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1382,31 +1382,16 @@ object QueriesExt {
     * iterative contraction exactly once (the r5 judge measured the
     * recomputation at ~9 s of a 62 s bench). Checkpoint storage is
     * RDD-level, so a SQL-cache clear between bench passes does not
-    * invalidate it; the corpus file-listing signature in the key catches
-    * an overwritten corpus, and LRU eviction releases the evicted
-    * frame's blocks.
+    * invalidate it; the corpus content signature in the key catches an
+    * overwritten corpus, and LRU eviction releases the evicted frame's
+    * blocks.
     */
   private val LabelCacheCap = 4
-  private val labelCache =
-    new java.util.LinkedHashMap[String, DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, DataFrame]): Boolean =
-        if (size() > LabelCacheCap) { Dedup.release(e.getValue); true } else false
-    }
-
-  /** Corpus content signature for the label-cache key: path, size and
-    * modification time of every input file, read from the relation's
-    * file index (already listed at plan time — no extra filesystem
-    * RPCs). Size+mtime catch an in-place rewrite that reuses identical
-    * file names (deterministic datagen overwriting a corpus dir), which
-    * a path-only hash would alias to the stale entry. Falls back to
-    * path-only hashing for non-file-based plans.
-    */
-  private def corpusSignature(dd: DataFrame): String =
-    graft.operators.CorpusStats.contentSignature64(dd)
+  private[graft] val ClusterLabels = OperatorState.Kind[DataFrame](
+    "cluster_labels", LabelCacheCap)(Dedup.release)
 
   /** Eviction contract: frames returned here are backed by truncated-
-    * lineage checkpoints and are INVALIDATED when their cache entry is
+    * lineage checkpoints and are INVALIDATED when their memo entry is
     * LRU-evicted (more than [[LabelCacheCap]] distinct (session,
     * corpus) keys) or [[clearClusterLabelCache]] runs — a held
     * reference fails on its next action with missing-checkpoint-block
@@ -1415,32 +1400,28 @@ object QueriesExt {
     *
     * CACHE-HYGIENE CONTRACT for long-lived library sessions (the bench
     * clears Spark's SQL cache between passes; a library caller must
-    * release explicitly):
-    *  1. per composed RESULT (e.g. [[cuDedupSemantic]]'s output):
-    *     [[releaseDerived]] once consumed — drops the result's own
-    *     checkpoints, never the shared label stage;
-    *  2. per CORPUS lifetime: [[clearClusterLabelCache]] — drops the
-    *     memoized label frames (LRU eviction covers corpus churn
-    *     automatically);
-    *  3. per batch boundary: [[graft.operators.Dedup.releaseIntermediates]]
-    *     — drops the operators' tracked scratch persists (shingle
-    *     projections, sketch frames) that otherwise accumulate in the
-    *     session's SQL cache.
-    * The `releaseDerived` spec in `ScaleOpsSpec` pins that the three
-    * steps together leave zero persisted blocks.
+    * release explicitly). Operator state lives in one session-keyed
+    * registry ([[graft.operators.OperatorState]]) with two lifetimes:
+    *  - MEMO entries (sizing counts, trained centroids, broadcast
+    *    banks, these label frames) are capped per kind and released on
+    *    LRU eviction; [[clearClusterLabelCache]] drops the label frames
+    *    at the end of a corpus's lifetime;
+    *  - SCRATCH entries (the operators' shingle projections and sketch
+    *    frames) accumulate in the session's SQL cache until
+    *    [[graft.operators.Dedup.releaseIntermediates]] drops them at a
+    *    batch boundary.
+    * A composed RESULT (e.g. [[cuDedupSemantic]]'s output) holds its
+    * own checkpoints outside the registry: [[releaseDerived]] drops
+    * them once consumed, never the shared label stage.
+    * `OperatorState.clear(Some(session))` drops every entry of a
+    * session in one call. The `releaseDerived` spec in `ScaleOpsSpec`
+    * pins that these releases leave zero persisted blocks and zero
+    * registry entries.
     */
   def clusterLabels(s: SparkSession, d: String): DataFrame = {
     val dd = docs(s, d)
-    // applicationId qualifies the identity hash: a GC'd session's
-    // reused identity hash can otherwise alias a dead entry
-    val key = s"${s.sparkContext.applicationId}|${System.identityHashCode(s)}|$d|" +
-      corpusSignature(dd)
-    labelCache.synchronized(Option(labelCache.get(key))).getOrElse {
-      // compute OUTSIDE the monitor — label production is multi-second
-      // (minutes at high SF) and holding the lock would serialize
-      // unrelated corpora; a rare concurrent duplicate computation is
-      // benign (the loser's frame is released on insert).
-      //
+    OperatorState.memo(s, ClusterLabels,
+        OperatorState.contentKey(dd)) {
       // Exact duplicates attach by DETERMINISTIC md5-group edges
       // (doc → its group's minimum id) and minhash banding runs over
       // the exact SURVIVORS only: an identical-content flood would
@@ -1475,22 +1456,15 @@ object QueriesExt {
         .localCheckpoint(true)
       Dedup.release(comp) // labels materialized; the node frame can go
       marked.unpersist(false)
-      labelCache.synchronized {
-        Option(labelCache.get(key)) match {
-          case Some(winner) => Dedup.release(labeled); winner
-          case None => labelCache.put(key, labeled); labeled
-        }
-      }
+      labeled
     }
   }
 
   /** Drop all memoized label frames and release their storage (tests /
     * long-lived sessions switching corpora).
     */
-  def clearClusterLabelCache(): Unit = labelCache.synchronized {
-    val it = labelCache.values().iterator()
-    while (it.hasNext) { Dedup.release(it.next()); it.remove() }
-  }
+  def clearClusterLabelCache(): Unit =
+    OperatorState.clear(kinds = Seq(ClusterLabels))
 
   /** Release the checkpoint storage held by a dedup-family RESULT frame
     * (e.g. [[cuDedupSemantic]]'s output, whose plan contains the
@@ -1505,13 +1479,8 @@ object QueriesExt {
     * a derived result.
     */
   def releaseDerived(df: DataFrame): Unit = {
-    val shared = labelCache.synchronized {
-      val b = Set.newBuilder[Int]
-      val it = labelCache.values().iterator()
-      while (it.hasNext)
-        b ++= org.apache.spark.sql.GraftSqlShim.checkpointRddIds(it.next())
-      b.result()
-    }
+    val shared = OperatorState.values(ClusterLabels)
+      .flatMap(org.apache.spark.sql.GraftSqlShim.checkpointRddIds).toSet
     org.apache.spark.sql.GraftSqlShim.releaseCheckpoint(df, shared)
   }
   private val ddClusterCte: String =

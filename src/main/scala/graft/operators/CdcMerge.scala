@@ -85,8 +85,8 @@ object CdcMerge {
   }
 
   /** Split a change batch into keyable rows and NULL-PK violations — the
-    * shared boundary guard for BOTH keyed stores (ParquetUpsertTable,
-    * DeltaLogTable): a NULL key never matches itself in the merge
+    * boundary guard of the keyed store (ParquetUpsertTable's seed and
+    * merge paths): a NULL key never matches itself in the merge
     * anti-join, so an admitted NULL-PK row is an un-upsertable,
     * un-deletable ghost that duplicates on every replay. Callers must
     * make the second frame observable (side-output + count), not drop it.

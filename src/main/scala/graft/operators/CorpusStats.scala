@@ -11,19 +11,16 @@ import org.apache.spark.sql.functions.{col, size}
   * composed pipeline (e.g. `cu_dedup_semantic` = exact dedup → minhash
   * → semdedup) re-derives them once per operator over the SAME corpus:
   * at 100 TB that is several full-scan jobs spent re-learning one
-  * number. This cache keys the result by (session, semantic plan,
-  * input-file signature) so a pipeline run pays each sizing action once
-  * per distinct frame.
-  *
-  * Key design (same class as `QueriesExt.clusterLabels`' label cache):
-  *  - session: applicationId + session identity hash — a restarted
-  *    app or a second session never aliases;
+  * number. The [[Sizing]] memo keys the result by session and
+  * [[OperatorState.contentKey]] (semantic plan + input-file content
+  * signature) so a pipeline run pays each sizing action once per
+  * distinct frame:
   *  - `Dataset.semanticHash` over the canonicalized plan — two
   *    lexically different but semantically equal frames share an
   *    entry; hash collisions are caught by a `sameSemantics` check on
-  *    the stored frame (collision ⇒ treated as a miss, entry replaced);
-  *  - [[fileSignature]] — path, length and mtime of every input file,
-  *    read from the already-materialized file index (no extra
+  *    the stored frame (a colliding frame is answered uncached);
+  *  - [[contentSignature64]] — path, length and mtime of every input
+  *    file, read from the already-materialized file index (no extra
   *    filesystem RPCs): an in-place rewrite or an appended ingest shard
   *    (the `dd_incremental` corpus between calls) changes the
   *    signature, so sizing never reuses a stale count. Non-file plans
@@ -31,40 +28,13 @@ import org.apache.spark.sql.functions.{col, size}
   *    which `semanticHash` already covers.
   *
   * Entries hold the frame's LINEAGE (plan + session refs), never data;
-  * the LRU cap bounds them. Wrong-sizing blast radius on a stale hit
-  * is performance-shaped (blocking parameters tuned for the wrong N),
-  * not correctness — every operator's recall contract is over its
-  * derived parameters, whatever they are — but the file signature
-  * makes the stale hit a non-event anyway.
+  * the LRU cap bounds them.
   */
 object CorpusStats {
 
   private val Cap = 128
-  // accessOrder = true: LRU on both reads and writes
-  private val cache =
-    new java.util.LinkedHashMap[String, (DataFrame, Long)](32, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (DataFrame, Long)]): Boolean = size() > Cap
-    }
-
-  // test hooks: ScaleOpsSpec pins "one sizing job per frame per
-  // pipeline run" by watching the miss counter across a composed call
-  private val missCounter = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] def misses: Long = missCounter.get()
-  private[graft] def clear(): Unit = cache.synchronized(cache.clear())
-
-  /** Content signature of a frame's file-based inputs: (path, size,
-    * mtime) of every file, from the plan's file index. Size+mtime catch
-    * in-place rewrites that reuse file names; new files (ingest append)
-    * change the set. Falls back to path-only hashing for plans whose
-    * relation exposes no file index.
-    */
-  def fileSignature(df: DataFrame): Int = {
-    val files = fileList(df)
-    if (files.isEmpty)
-      java.util.Arrays.hashCode(df.inputFiles.sorted.map(_.hashCode): Array[Int])
-    else files.sortBy(_._1).hashCode()
-  }
+  private[graft] val Sizing =
+    OperatorState.Kind[(DataFrame, Long)]("sizing", Cap)(_ => ())
 
   private def fileList(df: DataFrame): Seq[(String, Long, Long)] = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
@@ -84,9 +54,8 @@ object CorpusStats {
   /** 64-bit-class content signature for MEMO KEYS that outlive a single
     * corpus (broadcast survivor banks, label caches): a string carrying
     * file count, total bytes, and a 64-bit multiplicative fold over the
-    * sorted (path, len, mtime) list. A 32-bit `fileSignature` aliases at
-    * ~2⁻³² per corpus pair over a long-lived application; here a
-    * collision additionally needs matching file count AND total bytes.
+    * sorted (path, len, mtime) list. A collision needs a matching file
+    * count AND total bytes on top of the 64-bit fold.
     * Frames with no file listing (in-memory relations, views) fall back
     * to the analyzed plan's semanticHash — NOT a hash of the empty list,
     * which would alias every such corpus to one constant key.
@@ -104,23 +73,11 @@ object CorpusStats {
     }
   }
 
-  private def sessionKey(df: DataFrame): String = {
-    val s = df.sparkSession
-    s"${s.sparkContext.applicationId}|${System.identityHashCode(s)}"
-  }
-
   private def memo(df: DataFrame, kind: String)(compute: => Long): Long = {
-    val k = s"${sessionKey(df)}|$kind|${df.semanticHash()}|${fileSignature(df)}"
-    cache.synchronized(Option(cache.get(k))) match {
-      // sameSemantics guards the Int-hash collision case; a stopped
-      // session can't be hit (sessionKey pins the live session)
-      case Some((stored, v)) if stored.sameSemantics(df) => v
-      case _ =>
-        missCounter.incrementAndGet()
-        val v = compute
-        cache.synchronized(cache.put(k, (df, v)))
-        v
-    }
+    val (stored, v) = OperatorState.memo(df.sparkSession, Sizing,
+      OperatorState.contentKey(df, kind))((df, compute))
+    // sameSemantics guards the Int plan-hash collision case
+    if (stored.sameSemantics(df)) v else compute
   }
 
   /** Memoized `df.count()` for geometry derivation. */

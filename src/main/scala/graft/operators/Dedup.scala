@@ -17,37 +17,7 @@ import org.apache.spark.storage.StorageLevel
   */
 object Dedup {
 
-  /** Operator-scratch registry: every intra-operator `.persist` (shingle
-    * projections, sketch frames) is tracked here so a long-lived library
-    * session can drop dedup scratch storage deterministically via
-    * [[releaseIntermediates]]. The persists are deliberate — each feeds
-    * 2–3 downstream joins of its own operator — but they land in the
-    * session's SQL cache and outlive the query; a caller that never
-    * clears the cache (the bench does, a library user typically doesn't)
-    * would accumulate one entry per operator invocation. Strong
-    * references, bounded by invocation count between releases.
-    */
-  private val scratchFrames =
-    new java.util.concurrent.ConcurrentLinkedQueue[(String, DataFrame)]()
-
-  // appId + identity, like the label-cache key: the unified SparkSession
-  // API has no sessionUUID, and the tracked frame pins its session so
-  // the identity hash cannot alias a collected one
-  private def sessionKey(s: org.apache.spark.sql.SparkSession): String =
-    s"${s.sparkContext.applicationId}|${System.identityHashCode(s)}"
-
-  private def persistScratch(df: DataFrame): DataFrame = {
-    // opportunistic pruning keeps the registry bounded without an extra
-    // API: entries of STOPPED sessions pin DataFrames (and their
-    // sessions) forever otherwise — a multi-session app that never
-    // calls releaseIntermediates for a session it already stopped
-    // would accumulate one dead tuple per operator invocation
-    val it = scratchFrames.iterator()
-    while (it.hasNext) if (it.next()._2.sparkSession.sparkContext.isStopped) it.remove()
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK): DataFrame
-    scratchFrames.add((sessionKey(df.sparkSession), p))
-    p
-  }
+  import OperatorState.persistScratch
 
   /** Persist an operator-scratch frame hash-partitioned AND sorted by
     * `id` — the layout every verify-attach join requires. The cached
@@ -90,23 +60,16 @@ object Dedup {
     floor <= 0 || CorpusStats.rowCount(df) >= floor
   }
 
-  /** Unpersist every tracked operator-scratch frame of `spark`'s
-    * session, returning how many were dropped. Call at a corpus/batch
-    * boundary (after consuming the operators' results) — not
-    * concurrently with an in-flight dedup query of the same session,
-    * which would silently recompute its scratch. Part of the library
-    * cache-hygiene contract documented on
+  /** Unpersist every operator-scratch frame (shingle projections,
+    * sketch frames) of `spark`'s session, returning how many were
+    * dropped. Call at a corpus/batch boundary (after consuming the
+    * operators' results) — not concurrently with an in-flight dedup
+    * query of the same session, which would silently recompute its
+    * scratch. Part of the library cache-hygiene contract documented on
     * [[graft.QueriesExt.clusterLabels]].
     */
-  def releaseIntermediates(spark: org.apache.spark.sql.SparkSession): Int = {
-    val it = scratchFrames.iterator()
-    var n = 0
-    while (it.hasNext) {
-      val (sid, df) = it.next()
-      if (sid == sessionKey(spark)) { df.unpersist(false); it.remove(); n += 1 }
-    }
-    n
-  }
+  def releaseIntermediates(spark: org.apache.spark.sql.SparkSession): Int =
+    OperatorState.clear(Some(spark), Seq(OperatorState.Scratch))
 
   /** Exact dedup: keep the lowest-id row per identical content
     * (fingerprint = md5). One groupBy shuffle, map-side combined.
@@ -1198,17 +1161,13 @@ object Dedup {
 
   private val MaxCachedSimhashBanks = 2
   // value None = duplicate corpus ids → scan-tier-INELIGIBLE, memoized
-  private val simhashBankCache = Similarity.boundedBroadcastCache[
+  private[graft] val SimhashBanks = OperatorState.Kind[
     Option[org.apache.spark.broadcast.Broadcast[graft.plans.SimhashIndexBank]]](
-    MaxCachedSimhashBanks)(v => v)
-  private[graft] def simhashBankCacheSize: Int =
-    simhashBankCache.synchronized(simhashBankCache.size())
-  private[graft] def clearSimhashBankCache(): Unit =
-    Similarity.clearBroadcastCache(simhashBankCache)(v => v)
+    "simhash_bank", MaxCachedSimhashBanks)(_.foreach(OperatorState.unpersist))
 
   /** Memoized broadcast simhash chunk index
-    * ([[graft.plans.SimhashIndexBank]]) — keyed on the SOURCE frame's
-    * semantic plan + file signature + geometry, like the LSH/IVF banks.
+    * ([[graft.plans.SimhashIndexBank]]) — keyed on the derived sets
+    * frame's content key + geometry, like the LSH/IVF banks.
     * The collect runs at DataFrame-construction time and reads the
     * (id, sim, sk) columns of the already-persisted scratch — ~48 B/row
     * to the driver, admitted only under `maxIndexBroadcastBytes` by the
@@ -1216,19 +1175,17 @@ object Dedup {
     * the other banks. Duplicate ids memoize as None (fail-closed → join
     * tier).
     */
-  private def simhashBankFor(df: DataFrame, sets: DataFrame, cb: Int,
+  private def simhashBankFor(sets: DataFrame, cb: Int,
       maxBucketSize: Int)
       : Option[org.apache.spark.broadcast.Broadcast[graft.plans.SimhashIndexBank]] = {
     val sc = sets.sparkSession.sparkContext
-    // keyed on the DERIVED sets frame's semantic hash, not the source
-    // df's: the sets plan encodes textCol/idCol/shingleLen, so two
-    // calls on the same source with different columns or shingle
-    // length cannot alias to one bank (r14 advice); the file signature
-    // still covers data changes under an unchanged plan
-    val key = s"shb|${sc.applicationId}|${System.identityHashCode(sets.sparkSession)}|" +
-      s"${sets.queryExecution.analyzed.semanticHash()}|${CorpusStats.fileSignature(df)}|" +
-      s"$cb|$maxBucketSize"
-    Similarity.memoized(simhashBankCache, key) {
+    // keyed on the DERIVED sets frame's plan, not the source df's: the
+    // sets plan encodes textCol/idCol/shingleLen, so two calls on the
+    // same source with different columns or shingle length cannot
+    // alias to one bank (r14 advice); the sets plan reads the source's
+    // files, so their signature still covers data changes
+    OperatorState.memo(sets.sparkSession, SimhashBanks,
+        OperatorState.contentKey(sets, cb, maxBucketSize)) {
       // null ids are filtered like the join tier's semantics (a null id
       // never survives `x.id < y.id` there); without the filter a null
       // would read as doc 0 via getLong and could emit spurious pairs
@@ -1266,7 +1223,7 @@ object Dedup {
     val n = CorpusStats.rowCount(df)
     if (n == 0 || simhashIndexBytes(n, 64 / cb) > maxIndexBroadcastBytes)
       return None
-    val bankOpt = simhashBankFor(df, sets, cb, maxBucketSize)
+    val bankOpt = simhashBankFor(sets, cb, maxBucketSize)
     if (bankOpt.isEmpty) return None
     val bank = bankOpt.get
     val spark = sets.sparkSession
@@ -1409,13 +1366,9 @@ object Dedup {
     keptOccurrences * 16L + nDocs * 24L
 
   private val MaxCachedWinnowBanks = 2
-  private val winnowBankCache = Similarity.boundedBroadcastCache[
+  private[graft] val WinnowBanks = OperatorState.Kind[
     Option[org.apache.spark.broadcast.Broadcast[graft.plans.WinnowPairBank]]](
-    MaxCachedWinnowBanks)(v => v)
-  private[graft] def winnowBankCacheSize: Int =
-    winnowBankCache.synchronized(winnowBankCache.size())
-  private[graft] def clearWinnowBankCache(): Unit =
-    Similarity.clearBroadcastCache(winnowBankCache)(v => v)
+    "winnow_bank", MaxCachedWinnowBanks)(_.foreach(OperatorState.unpersist))
 
   private def winnowScanPairs(df: DataFrame, idCol: String, inv: DataFrame,
       minShared: Int, maxIndexBroadcastBytes: Long): Option[DataFrame] = {
@@ -1431,9 +1384,8 @@ object Dedup {
     if (CorpusStats.rowCount(df.select(col(idCol)).distinct()) != nDocs)
       return None
     val sc = inv.sparkSession.sparkContext
-    val key = s"wb|${sc.applicationId}|${System.identityHashCode(inv.sparkSession)}|" +
-      s"${inv.queryExecution.analyzed.semanticHash()}|${CorpusStats.fileSignature(df)}"
-    val bankOpt = Similarity.memoized(winnowBankCache, key) {
+    val bankOpt = OperatorState.memo(inv.sparkSession, WinnowBanks,
+        OperatorState.contentKey(inv)) {
       // explicit projection: a using-column join reorders columns to
       // put the key first, so a positional read would swap (id, fp).
       // null ids drop like the join tier (null fails x.id < y.id);
@@ -2118,13 +2070,9 @@ object Dedup {
   // value None = duplicate corpus ids → scan-tier-INELIGIBLE (the
   // (bucketKey, salt) pipeline below keeps its own duplicate contract:
   // identical duplicate rows tolerated, conflicting ids fail fast)
-  private val embedBankCache = Similarity.boundedBroadcastCache[
+  private[graft] val EmbedBanks = OperatorState.Kind[
     Option[org.apache.spark.broadcast.Broadcast[graft.plans.EmbedIndexBank]]](
-    MaxCachedEmbedBanks)(v => v)
-  private[graft] def embedBankCacheSize: Int =
-    embedBankCache.synchronized(embedBankCache.size())
-  private[graft] def clearEmbedBankCache(): Unit =
-    Similarity.clearBroadcastCache(embedBankCache)(v => v)
+    "embed_bank", MaxCachedEmbedBanks)(_.foreach(OperatorState.unpersist))
 
   /** The embedding near-dup candidate SCAN tier (r15 — see
     * [[graft.plans.EmbedIndexBank]]): distinct checkpoint-surviving
@@ -2145,7 +2093,7 @@ object Dedup {
     * `spark.graft.embed.scanTier=off`, when bits > 30, or when corpus
     * ids are not unique.
     */
-  private def embedScanSurvivors(df: DataFrame, sig: DataFrame, n: Long,
+  private def embedScanSurvivors(sig: DataFrame, n: Long,
       poolBits: Int, bits: Int, tabs: Int, maxBucketSize: Int,
       threshold: Double, maxBroadcastBytes: Long): Option[DataFrame] = {
     val spark = sig.sparkSession
@@ -2156,10 +2104,8 @@ object Dedup {
     if (graft.plans.EmbedIndexBank.estimateBytes(n, words, bits, tabs) >
       maxBroadcastBytes) return None
     val sc = spark.sparkContext
-    val key = s"eb|${sc.applicationId}|${System.identityHashCode(spark)}|" +
-      s"${sig.queryExecution.analyzed.semanticHash()}|${CorpusStats.fileSignature(df)}|" +
-      s"$poolBits|$bits|$tabs|$maxBucketSize"
-    val bankOpt = Similarity.memoized(embedBankCache, key) {
+    val bankOpt = OperatorState.memo(spark, EmbedBanks,
+        OperatorState.contentKey(sig, poolBits, bits, tabs, maxBucketSize)) {
       // null sketches (null vectors) never enter the exploded index
       // (explode of a null array drops the row), so they are excluded
       // here too; null ids are already dropped at the scratch
@@ -2413,7 +2359,7 @@ object Dedup {
         explode(poolBucketKeys(col("sk"), poolBits, bits, tabs)).as("bk")),
       Seq("bk"), maxBucketSize, saltOn = col("id"))
     val survivors =
-      if (broadcastTier) embedScanSurvivors(df, sig, n, poolBits, bits,
+      if (broadcastTier) embedScanSurvivors(sig, n, poolBits, bits,
         tabs, maxBucketSize, threshold, maxBroadcastBytes).getOrElse {
         // bucket-LOCAL pairwise prefilter — the r11 rewrite of the bucket
         // self-join. The join shape computed the exploded index TWICE

@@ -364,9 +364,9 @@ object Similarity {
 
   private val MaxCachedLshBanks = 4
   // value None = duplicate corpus ids → scan-tier-INELIGIBLE, memoized
-  private val lshBankCache = boundedBroadcastCache[
+  private[graft] val LshBanks = OperatorState.Kind[
     Option[org.apache.spark.broadcast.Broadcast[graft.plans.LshIndexBank]]](
-    MaxCachedLshBanks)(v => v)
+    "lsh_bank", MaxCachedLshBanks)(_.foreach(OperatorState.unpersist))
 
   /** Memoized broadcast LSH index ([[graft.plans.LshIndexBank]]) —
     * keyed and budgeted like [[indexBankBroadcastFor]]; the same
@@ -378,10 +378,8 @@ object Similarity {
       bits: Int, nTables: Int)
       : Option[org.apache.spark.broadcast.Broadcast[graft.plans.LshIndexBank]] = {
     val sc = df.sparkSession.sparkContext
-    val key = s"lb|${sc.applicationId}|${System.identityHashCode(df.sparkSession)}|" +
-      s"${df.queryExecution.analyzed.semanticHash()}|${CorpusStats.fileSignature(df)}|" +
-      s"$idCol|$vecCol|$bits|$nTables"
-    memoized(lshBankCache, key) {
+    OperatorState.memo(df.sparkSession, LshBanks,
+        OperatorState.contentKey(df, idCol, vecCol, bits, nTables)) {
       val sigCols = (0 until nTables).map(t =>
         hyperplaneSignature(col(vecCol), bits, seed = lshTableSeed(t)))
       val rows = df
@@ -399,11 +397,6 @@ object Similarity {
       else None
     }
   }
-
-  private[graft] def lshBankCacheSize: Int =
-    lshBankCache.synchronized(lshBankCache.size())
-  private[graft] def clearLshBankCache(): Unit =
-    clearBroadcastCache(lshBankCache)(v => v)
 
   /** IVF (inverted-file) approximate top-k: k-means partitions the
     * corpus into `nLists` cells; each query searches only the `nProbe`
@@ -1412,9 +1405,7 @@ object Similarity {
         // rerankC and probe deliberately NOT in the key: the bank holds
         // only (assignment, codes), which neither affects — two calls
         // differing only in search width share one broadcast slot.
-        val srcKey = s"${System.identityHashCode(spark)}|" +
-          s"${df.queryExecution.analyzed.semanticHash()}|${CorpusStats.fileSignature(df)}|" +
-          s"$idCol|$vecCol|$lists|$m|$codebookK"
+        val srcKey = OperatorState.contentKey(df, idCol, vecCol, lists, m, codebookK)
         pqIndexBankBroadcastFor(srcKey, assigned, m).map { ibank =>
           val queries = queryFilter.fold(nn)(f => nn.filter(f(col("id"))))
             .select(col("id").as("query_id"), col("vec"))
@@ -1460,98 +1451,19 @@ object Similarity {
     Some(IvfPqFrames(assigned, probesLut, adc, cand, rankTopK(scored, k)))
   }
 
-  /** Per-corpus-version centroid cache: keyed on the analyzed plan's
-    * semantic hash + the corpus's file-listing signature + training
-    * params, so the same corpus reuses trained centroids across calls
-    * (e.g. the recall harness, repeated bench iterations) while a
-    * changed OR overwritten corpus retrains — a path overwritten with
-    * new data produces the same plan hash but different part-file names,
-    * which the listing signature catches. LRU-bounded so a long-lived
-    * session touching many corpora cannot grow the cache without limit.
-    * KMeans fits on a seeded uniform SAMPLE capped at `trainCap` rows
-    * (not `limit`, which takes the first rows in scan order and trains
-    * on one file's bias when the corpus is sorted or clustered on disk);
-    * sampled centroid quality is equivalent for IVF cell assignment, and
-    * the training cost stops scaling with the corpus.
-    */
-  /** Memoized centroid-bank broadcast for [[assignAndProbe]]: keyed on
-    * the centroid frame's canonicalized plan hash + input-file
-    * signature (the [[CorpusStats]] key design — seeded centroids
-    * derive from the corpus scan, trained centroids are a LocalRelation
-    * whose rows are part of the canonical plan), so repeated
-    * construction over the same centroids collects and broadcasts ONCE.
-    * Evicted entries are unpersisted eagerly (executor copies dropped;
-    * NOT destroy()ed — a still-referenced lazy plan re-fetches an
-    * unpersisted broadcast from the driver, while destroy would fail
-    * it); the ContextCleaner reclaims the rest once no plan holds it.
-    */
-  /** Bounded LRU cache for memoized broadcast banks — ONE
-    * implementation for the centroid/IVF/LSH caches so the
-    * evict-unpersist rule cannot drift between them.
-    */
-  private[operators] def boundedBroadcastCache[V](max: Int)(
-      toBroadcast: V => Option[org.apache.spark.broadcast.Broadcast[_]])
-      : java.util.LinkedHashMap[String, V] =
-    new java.util.LinkedHashMap[String, V](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, V]): Boolean = {
-        val evict = size() > max
-        // NonFatal only: swallowing InterruptedException or a VM error
-        // here would eat a thread interrupt during eviction (r13 advice)
-        if (evict) toBroadcast(e.getValue).foreach { b =>
-          try b.unpersist(false)
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-        evict
-      }
-    }
-
-  /** Clear a memoized broadcast cache AND unpersist every entry's
-    * broadcast — the clear-side mirror of `removeEldestEntry`'s
-    * evict-unpersist rule (r15 advice: a clear that drops the map
-    * references leaves the broadcasts pinned until JVM exit).
-    */
-  private[graft] def clearBroadcastCache[V](
-      cache: java.util.LinkedHashMap[String, V])(
-      toBroadcast: V => Option[org.apache.spark.broadcast.Broadcast[_]]): Unit =
-    cache.synchronized {
-      cache.values().forEach { v =>
-        toBroadcast(v).foreach { b =>
-          try b.unpersist(false)
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-      }
-      cache.clear()
-    }
-
   private val MaxCachedBanks = 8
-  private val bankCache = boundedBroadcastCache[
+  private[graft] val CentroidBanks = OperatorState.Kind[
     org.apache.spark.broadcast.Broadcast[graft.plans.CentroidBank]](
-    MaxCachedBanks)(Some(_))
+    "centroid_bank", MaxCachedBanks)(OperatorState.unpersist)
 
-  /** Per-key locks for the memoized bank/centroid builds: a plain
-    * check-then-act over the cache lets two concurrent callers (bench
-    * passes, parallel suites) both miss, both collect, and the loser's
-    * broadcast linger until plan GC — the leak the caches exist to
-    * prevent, narrowed to races. The compute runs under a per-key lock
-    * with a re-check inside, so exactly one caller per key builds;
-    * DIFFERENT keys still compute concurrently. Lock objects are never
-    * evicted — the key space is distinct corpora touched by a session,
-    * bounded in practice and ~48 bytes each — because evicting one
-    * while a builder holds it would let a latecomer mint a second lock
-    * and re-open the race.
-    */
-  private val keyLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private[operators] def memoized[V](cache: java.util.LinkedHashMap[String, V], key: String)
-      (build: => V): V =
-    keyLocks.computeIfAbsent(key, _ => new Object).synchronized {
-      cache.synchronized(Option(cache.get(key))).getOrElse {
-        val v = build
-        cache.synchronized(cache.put(key, v))
-        v
-      }
-    }
-
-  /** `keyOverride`: a caller-supplied CONTENT key replacing the
+  /** Memoized centroid-bank broadcast for [[assignAndProbe]]: keyed on
+    * the centroid frame's [[OperatorState.contentKey]] (seeded
+    * centroids derive from the corpus scan, trained centroids are a
+    * LocalRelation whose rows are part of the canonical plan), so
+    * repeated construction over the same centroids collects and
+    * broadcasts ONCE.
+    *
+    * `keyOverride`: a caller-supplied CONTENT key replacing the
     * plan-hash portion of the memo key (r17 ask #3). The default
     * plan-hash key is identity-sensitive when the frame's lineage
     * crosses a checkpoint (a LogicalRDD hashes by RDD instance), so a
@@ -1559,20 +1471,14 @@ object Similarity {
     * label-cache clear — would force a bank rebuild. A caller that can
     * PROVE its frame is a pure function of durable inputs (file
     * signatures + deterministic recipe) passes that proof as the key
-    * and memoizes through lineage churn. applicationId stays in the
-    * key — broadcast validity is per-SparkContext.
+    * and memoizes through lineage churn.
     */
   private def bankBroadcastFor(centDf: DataFrame,
       keyOverride: Option[String] = None)
       : org.apache.spark.broadcast.Broadcast[graft.plans.CentroidBank] = {
     val sc = centDf.sparkSession.sparkContext
-    val key = keyOverride match {
-      case Some(k) => s"cb|${sc.applicationId}|$k"
-      case None =>
-        s"cb|${sc.applicationId}|${System.identityHashCode(centDf.sparkSession)}|" +
-          s"${centDf.queryExecution.analyzed.semanticHash()}|${CorpusStats.fileSignature(centDf)}"
-    }
-    memoized(bankCache, key) {
+    OperatorState.memo(centDf.sparkSession, CentroidBanks,
+        keyOverride.getOrElse(OperatorState.contentKey(centDf))) {
       val bankRows = centDf.select(col("list_id").cast("int"), col("centroid"))
         .collect()
         .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
@@ -1585,16 +1491,16 @@ object Similarity {
   // memoized like a bank so the duplicate check also runs once; an
   // evicted inverted-file bank is ~100s of MB per entry — exactly the
   // lingering-broadcast mass the memoization exists to prevent, so the
-  // shared cache unpersists on evict
-  private val indexBankCache = boundedBroadcastCache[
+  // kind's release action unpersists it on evict
+  private[graft] val IndexBanks = OperatorState.Kind[
     Option[org.apache.spark.broadcast.Broadcast[graft.plans.IvfIndexBank]]](
-    MaxCachedIndexBanks)(v => v)
+    "ivf_index_bank", MaxCachedIndexBanks)(_.foreach(OperatorState.unpersist))
 
   /** Memoized broadcast inverted-file index for the IVF scan tier:
     * every corpus row assigned to its list by the SAME
     * NearestCentroidLists expression the join tier uses, collected and
-    * grouped per list. Keyed like [[bankBroadcastFor]] on both the
-    * corpus and centroid frames' plan hashes + file signatures.
+    * grouped per list. Keyed on the corpus frame's content key with
+    * the centroid frame's content key as a parameter.
     *
     * The collect is admitted by [[ivfIndexBytes]] ≤ the caller's
     * `maxIndexBroadcastBytes` budget (same explain-path trade as the
@@ -1613,15 +1519,9 @@ object Similarity {
     val sc = df.sparkSession.sparkContext
     // keyOverride: see [[bankBroadcastFor]] — content key through
     // checkpoint-lineage churn
-    val key = keyOverride match {
-      case Some(k) => s"ib|${sc.applicationId}|$k|$idCol|$vecCol"
-      case None =>
-        s"ib|${sc.applicationId}|${System.identityHashCode(df.sparkSession)}|" +
-          s"${df.queryExecution.analyzed.semanticHash()}|${CorpusStats.fileSignature(df)}|" +
-          s"$idCol|$vecCol|" +
-          s"${centDf.queryExecution.analyzed.semanticHash()}|${CorpusStats.fileSignature(centDf)}"
-    }
-    memoized(indexBankCache, key) {
+    val key = keyOverride.map(k => s"$k|$idCol|$vecCol").getOrElse(
+      OperatorState.contentKey(df, idCol, vecCol, OperatorState.contentKey(centDf)))
+    OperatorState.memo(df.sparkSession, IndexBanks, key) {
       val rows = df
         .select(col(idCol).as("id"), col(vecCol).as("vec"))
         // spread the n·lists·dim assignment pass across cores — a
@@ -1644,19 +1544,10 @@ object Similarity {
     }
   }
 
-  // test hook (BankCacheSpec): observe hit/miss behavior across calls
-  private[graft] def bankCacheSize: Int = bankCache.synchronized(bankCache.size())
-  private[graft] def clearBankCache(): Unit =
-    clearBroadcastCache(bankCache)(Some(_))
-  private[graft] def indexBankCacheSize: Int =
-    indexBankCache.synchronized(indexBankCache.size())
-  private[graft] def clearIndexBankCache(): Unit =
-    clearBroadcastCache(indexBankCache)(v => v)
-
   private val MaxCachedPqIndexBanks = 4
-  private val pqIndexBankCache = boundedBroadcastCache[
+  private[graft] val PqIndexBanks = OperatorState.Kind[
     Option[org.apache.spark.broadcast.Broadcast[graft.plans.PqIndexBank]]](
-    MaxCachedPqIndexBanks)(v => v)
+    "pq_index_bank", MaxCachedPqIndexBanks)(_.foreach(OperatorState.unpersist))
 
   /** Memoized broadcast ENCODED index for the IVF-PQ scan tier: the
     * `assigned` frame's (list_id, id, codes) rows — the SAME rows the
@@ -1672,8 +1563,7 @@ object Similarity {
   private def pqIndexBankBroadcastFor(srcKey: String, assigned: DataFrame,
       m: Int): Option[org.apache.spark.broadcast.Broadcast[graft.plans.PqIndexBank]] = {
     val sc = assigned.sparkSession.sparkContext
-    val key = s"pqib|${sc.applicationId}|$srcKey"
-    memoized(pqIndexBankCache, key) {
+    OperatorState.memo(assigned.sparkSession, PqIndexBanks, srcKey) {
       val rows = assigned
         .select(col("list_id"), col("id"), col("codes"))
         .collect()
@@ -1683,11 +1573,6 @@ object Similarity {
       if (unique) Some(sc.broadcast(graft.plans.PqIndexBank(rows, m))) else None
     }
   }
-
-  private[graft] def pqIndexBankCacheSize: Int =
-    pqIndexBankCache.synchronized(pqIndexBankCache.size())
-  private[graft] def clearPqIndexBankCache(): Unit =
-    clearBroadcastCache(pqIndexBankCache)(v => v)
 
   /** IVF-PQ ADC scan tier: per query, ONE map-side kernel assigns the
     * probe lists (the [[graft.plans.NearestCentroidLists]] loop
@@ -1798,23 +1683,27 @@ object Similarity {
   }
 
   private val MaxCachedCentroids = 8
-  private val centroidCache =
-    new java.util.LinkedHashMap[String, Array[(Int, Array[Float])]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Array[(Int, Array[Float])]]): Boolean =
-        size() > MaxCachedCentroids
-    }
+  private[graft] val TrainedCentroids = OperatorState.Kind[Array[(Int, Array[Float])]](
+    "trained_centroids", MaxCachedCentroids)(_ => ())
 
+  /** Per-corpus-version trained centroids: keyed on the corpus frame's
+    * [[OperatorState.contentKey]] + training params, so the same corpus
+    * reuses trained centroids across calls (e.g. the recall harness,
+    * repeated bench iterations) while a changed, overwritten or
+    * rewritten-in-place corpus retrains (its files' size/mtime change
+    * the key). KMeans fits on a seeded uniform SAMPLE capped at
+    * `trainCap` rows (not `limit`, which takes the first rows in scan
+    * order and trains on one file's bias when the corpus is sorted or
+    * clustered on disk); sampled centroid quality is equivalent for IVF
+    * cell assignment, and the training cost stops scaling with the
+    * corpus.
+    */
   private def trainedCentroids(df: DataFrame, vecCol: String, nLists: Int,
       seed: Long, trainCap: Int): Array[(Int, Array[Float])] = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    // driver-side metadata only: part-file names change on overwrite
-    val corpusSig = java.util.Arrays.hashCode(
-      df.inputFiles.sorted.map(_.hashCode): Array[Int])
-    val key = s"tc|${df.queryExecution.analyzed.semanticHash()}|$corpusSig|" +
-      s"$vecCol|$nLists|$seed|$trainCap"
-    memoized(centroidCache, key) {
+    OperatorState.memo(df.sparkSession, TrainedCentroids,
+        OperatorState.contentKey(df, vecCol, nLists, seed, trainCap)) {
       val vecs = df.select(array_to_vector(
         col(vecCol).cast("array<double>")).as("features"))
       // unbiased bounded slice: count once per corpus version (training

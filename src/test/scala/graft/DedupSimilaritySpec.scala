@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, OperatorState, Similarity}
 import graft.functions.VectorFunctions
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
@@ -476,9 +476,9 @@ class DedupSimilaritySpec extends SparkSuite {
       Dedup.embeddingNearDupPairs(emb, "embedding", "vec_id",
         threshold = QueriesExt.NearDupCosine, nTables = 36, maxBucketSize = 20)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    Dedup.clearEmbedBankCache()
+    OperatorState.clear(Some(spark), Seq(Dedup.EmbedBanks))
     val scan = run()
-    assert(Dedup.embedBankCacheSize >= 1,
+    assert(OperatorState.stats(Dedup.EmbedBanks).entries >= 1,
       "scan tier did not engage — the test would compare the pipeline to itself")
     assert(scan.nonEmpty)
     spark.conf.set(Dedup.EmbedScanTierKey, "off")
@@ -507,7 +507,7 @@ class DedupSimilaritySpec extends SparkSuite {
     // (idempotent bank put, pairs unchanged after distinct) while the
     // scan tier memoizes None and must fall through — outputs equal
     val withDup = emb.unionAll(emb.limit(1))
-    Dedup.clearEmbedBankCache()
+    OperatorState.clear(Some(spark), Seq(Dedup.EmbedBanks))
     val viaScanPath = Dedup.embeddingNearDupPairs(withDup, "embedding", "vec_id",
       threshold = QueriesExt.NearDupCosine)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
@@ -525,16 +525,16 @@ class DedupSimilaritySpec extends SparkSuite {
     // on a 500-row corpus are all singletons (per-table collision
     // ~1.6e-6), so zero pairs is the CORRECT output at this geometry —
     // the assertions are "refused + ran + nothing spurious", not recall
-    Dedup.clearEmbedBankCache()
+    OperatorState.clear(Some(spark), Seq(Dedup.EmbedBanks))
     val auto = Dedup.embeddingNearDupPairs(emb, "embedding", "vec_id",
       threshold = QueriesExt.NearDupCosine)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(auto.nonEmpty && Dedup.embedBankCacheSize >= 1)
-    Dedup.clearEmbedBankCache()
+    assert(auto.nonEmpty && OperatorState.stats(Dedup.EmbedBanks).entries >= 1)
+    OperatorState.clear(Some(spark), Seq(Dedup.EmbedBanks))
     val wide = Dedup.embeddingNearDupPairs(emb, "embedding", "vec_id",
       threshold = QueriesExt.NearDupCosine, nBits = 31, nTables = 64)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(Dedup.embedBankCacheSize == 0,
+    assert(OperatorState.stats(Dedup.EmbedBanks).entries == 0,
       "bits=31 must refuse the scan tier — no bank should have been built")
     assert(wide.subsetOf(auto),
       s"wide geometry emitted pairs outside the exact set: ${wide -- auto}")
@@ -1000,20 +1000,20 @@ class DedupSimilaritySpec extends SparkSuite {
   }
 
   test("centroid bank broadcast is memoized per centroid frame") {
-    Similarity.clearBankCache()
+    OperatorState.clear(Some(spark), Seq(Similarity.CentroidBanks))
     val emb = Tables.embeddings(spark, sf001)
     Similarity.ivfSeededCandidates(emb, "vec_id", "embedding",
       nLists = 8, nProbe = 2).count()
-    assert(Similarity.bankCacheSize == 1)
+    assert(OperatorState.stats(Similarity.CentroidBanks).entries == 1)
     // same frame → same canonical plan + file signature → cache hit
     Similarity.ivfSeededCandidates(emb, "vec_id", "embedding",
       nLists = 8, nProbe = 2).count()
-    assert(Similarity.bankCacheSize == 1,
+    assert(OperatorState.stats(Similarity.CentroidBanks).entries == 1,
       "repeated construction re-collected the centroid bank")
     // different centroid geometry → different plan → new entry
     Similarity.ivfSeededCandidates(emb, "vec_id", "embedding",
       nLists = 4, nProbe = 2).count()
-    assert(Similarity.bankCacheSize == 2)
+    assert(OperatorState.stats(Similarity.CentroidBanks).entries == 2)
   }
 
   /** r14: the simhash candidate scan tier (broadcast chunk index) must
@@ -1027,7 +1027,7 @@ class DedupSimilaritySpec extends SparkSuite {
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Int)] =
       df.collect().toSet[org.apache.spark.sql.Row].map(r => (r.getLong(0), r.getLong(1),
         java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3)))
-    Dedup.clearSimhashBankCache()
+    OperatorState.clear(Some(spark), Seq(Dedup.SimhashBanks))
     val scan = Dedup.simhashNearDupPairs(docs, "text", "doc_id", threshold = 0.5)
     val join = Dedup.simhashNearDupPairs(docs, "text", "doc_id", threshold = 0.5,
       maxIndexBroadcastBytes = 0)
@@ -1040,7 +1040,7 @@ class DedupSimilaritySpec extends SparkSuite {
     val plan = scan.queryExecution.executedPlan.toString
     assert(plan.contains("MapPartitions"), plan)
     assert(!plan.contains("chunk_val"), plan)
-    assert(Dedup.simhashBankCacheSize == 1)
+    assert(OperatorState.stats(Dedup.SimhashBanks).entries == 1)
     // saturated buckets: maxBucketSize = 2 truncates nearly every bucket
     // — the bank must keep the same smallest-id survivors as
     // truncateHotKeys, and drop the same probe rows
@@ -1222,18 +1222,19 @@ class DedupSimilaritySpec extends SparkSuite {
     */
   test("explicit-geometry lshTopK with zero budget runs no sizing jobs") {
     import graft.operators.CorpusStats
+    def misses = OperatorState.stats(CorpusStats.Sizing).misses
     // fresh plan (unique literal content) so the memo cache cannot hide
     // a sizing job behind a prior suite's entry
     val emb = Tables.embeddings(spark, sf001)
       .filter($"vec_id" =!= -987654321L)
-    val m0 = CorpusStats.misses
+    val m0 = misses
     Similarity.lshTopK(emb, "vec_id", "embedding", k = 5, nBits = 12,
       maxIndexBroadcastBytes = 0)
-    assert(CorpusStats.misses == m0,
+    assert(misses == m0,
       "zero-budget explicit-nBits lshTopK ran a sizing job")
     // control: the default budget needs n (+ dim) for admission
     Similarity.lshTopK(emb, "vec_id", "embedding", k = 5, nBits = 12)
-    assert(CorpusStats.misses > m0)
+    assert(misses > m0)
   }
 }
 

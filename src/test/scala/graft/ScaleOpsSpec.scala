@@ -219,15 +219,13 @@ class ScaleOpsSpec extends SparkSuite {
   }
 
   test("survivor bank memo is CONTENT-keyed: survives a label-cache clear (r17)") {
-    import graft.operators.Similarity
-    QueriesExt.clearClusterLabelCache()
-    Similarity.clearIndexBankCache()
-    Similarity.clearBankCache()
+    import graft.operators.{OperatorState, Similarity}
+    OperatorState.clear(Some(spark))
     val first = QueriesExt.cuDedupSemantic(spark, sf001)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(first.nonEmpty)
-    val banksAfterFirst = Similarity.indexBankCacheSize
-    val cbanksAfterFirst = Similarity.bankCacheSize
+    val banksAfterFirst = OperatorState.stats(Similarity.IndexBanks).entries
+    val cbanksAfterFirst = OperatorState.stats(Similarity.CentroidBanks).entries
     assert(banksAfterFirst >= 1, "scan tier must have admitted a bank at sf0.001")
     // label churn: the labels recompute (new checkpoint identity) but the
     // survivor CONTENT is unchanged — the bank memo key must hit
@@ -235,9 +233,9 @@ class ScaleOpsSpec extends SparkSuite {
     val second = QueriesExt.cuDedupSemantic(spark, sf001)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(second == first)
-    assert(Similarity.indexBankCacheSize == banksAfterFirst,
+    assert(OperatorState.stats(Similarity.IndexBanks).entries == banksAfterFirst,
       "label-cache clear must NOT force a survivor index-bank rebuild")
-    assert(Similarity.bankCacheSize == cbanksAfterFirst,
+    assert(OperatorState.stats(Similarity.CentroidBanks).entries == cbanksAfterFirst,
       "label-cache clear must NOT force a survivor centroid-bank rebuild")
     QueriesExt.clearClusterLabelCache()
   }
@@ -279,6 +277,15 @@ class ScaleOpsSpec extends SparkSuite {
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert((after -- before).isEmpty,
       s"blocks left after full release: ${(after -- before).mkString(",")}")
+    // end of session lifetime: one call drops the remaining memo
+    // entries (sizing counts, centroids, banks) of every kind
+    import graft.operators.OperatorState
+    assert(OperatorState.clear(Some(spark)) > 0)
+    val kinds = OperatorState.allKinds
+    assert(kinds.size >= 11, s"operator kinds not all registered: $kinds")
+    kinds.foreach { k =>
+      assert(OperatorState.stats(k).entries == 0, s"$k entries left after full release")
+    }
     } finally {
       spark.conf.unset(graft.operators.Dedup.CcMaxDriverEdgesKey)
       QueriesExt.clearClusterLabelCache()
@@ -383,24 +390,25 @@ class AsOfJoinSpec extends SparkSuite {
   }
 
   test("auto-sizing actions run once per (session, plan, files): CorpusStats memo") {
-    import graft.operators.{CorpusStats, Dedup}
-    CorpusStats.clear()
+    import graft.operators.{CorpusStats, Dedup, OperatorState}
+    def misses = OperatorState.stats(CorpusStats.Sizing).misses
+    OperatorState.clear(Some(spark), Seq(CorpusStats.Sizing))
     val emb = Tables.embeddings(spark, sf001).select("vec_id", "embedding")
-    val m0 = CorpusStats.misses
+    val m0 = misses
     // first derivation: one rowCount + one vecDim job
     Dedup.embeddingNearDupPairs(emb, "embedding", "vec_id", threshold = 0.8).count()
-    val m1 = CorpusStats.misses
+    val m1 = misses
     assert(m1 - m0 == 2, s"expected 2 sizing misses on a cold cache, got ${m1 - m0}")
     // a REBUILT semantically-equal frame over the same files hits the
     // cache — zero additional sizing jobs for the whole second run
     val emb2 = Tables.embeddings(spark, sf001).select("vec_id", "embedding")
     Dedup.embeddingNearDupPairs(emb2, "embedding", "vec_id", threshold = 0.8).count()
-    assert(CorpusStats.misses == m1,
-      s"expected 0 sizing misses on re-run, got ${CorpusStats.misses - m1}")
+    assert(misses == m1,
+      s"expected 0 sizing misses on re-run, got ${misses - m1}")
     // a DIFFERENT frame (filter pushed into the plan) is its own entry
     Dedup.embeddingNearDupPairs(emb.filter(col("vec_id") % 2 === 0),
       "embedding", "vec_id", threshold = 0.8).count()
-    assert(CorpusStats.misses > m1)
+    assert(misses > m1)
     // rewritten input files invalidate: same plan shape, changed content
     val dir = java.nio.file.Files.createTempDirectory("cstats").toString
     Seq(1L, 2L, 3L).toDF("id").write.mode("overwrite").parquet(dir)

@@ -266,18 +266,4 @@ class NullPkMergeSpec extends SparkSuite {
     // the drop is observable: every violation landed in the quarantine
     assert(t.nullPkQuarantine().count() == 3L) // 1 seed + 2 merges
   }
-
-  test("DeltaLogTable applies the same NULL-PK quarantine policy") {
-    val path = tmpDir("nullpkdelta") + "/t"
-    val t = new graft.operators.DeltaLogTable(spark, path, Seq("k"))
-    t.seed(Seq((Option(1L), "a")).toDF("k", "v"))
-    t.append(Seq(
-      (Option(2L), "b", "c", 1L), (Option.empty[Long], "ghost", "c", 1L))
-      .toDF("k", "v", "__op", "__source_ts_ms")
-      .withColumn("__seq", monotonically_increasing_id()),
-      Seq(col("__source_ts_ms"), col("__seq")))
-    val rows = t.read().select("k", "v").as[(Option[Long], String)].collect().toSeq
-    assert(rows.count(_._1.isEmpty) == 0, s"null-PK rows leaked: $rows")
-    assert(spark.read.parquet(s"$path.nullpk").count() == 1L)
-  }
 }
